@@ -67,8 +67,16 @@ def estimate_u(
         sr = right.sample(fraction=frac_r, seed=seed + 1)
 
     cols = [c.col for c in comparisons]
-    pairs = sl.select(*[F.col(c).alias(c + "_l") for c in cols]).crossJoin(
-        sr.select(*[F.col(c).alias(c + "_r") for c in cols])
+    # spread the left sample over every core and broadcast the right one,
+    # so the left is the cross join's streamed side whatever the size
+    # estimates say (a small preprocessed input arrives as one coalesced
+    # partition, which ran the whole cross join in one task). Each side
+    # holds ~sqrt(max_pairs) rows. The u counts are integer sums, so the
+    # layout cannot change them.
+    pairs = (
+        sl.repartition(left.sparkSession.sparkContext.defaultParallelism)
+        .select(*[F.col(c).alias(c + "_l") for c in cols])
+        .crossJoin(F.broadcast(sr.select(*[F.col(c).alias(c + "_r") for c in cols])))
     )
     with_gammas = add_gammas(pairs, comparisons)
     aggs = []
@@ -98,7 +106,8 @@ def gamma_pattern_counts(
     comparisons: list[Comparison],
 ) -> list[tuple[tuple[int, ...], int]]:
     """One Spark job: blocked pairs under the training rule → joint gamma
-    pattern histogram, collected (≤ ∏ levels rows)."""
+    pattern histogram, collected (≤ ∏ levels rows) and sorted, so EM sums
+    the patterns in the same order whatever the partition layout."""
     cols = list({c.col for c in comparisons} | set(training_block_on))
     pairs = blocked_pairs(left.select(*cols), right.select(*cols), training_block_on)
     # a compared column that is also a blocking key comes out unsuffixed —
@@ -111,7 +120,7 @@ def gamma_pattern_counts(
     with_gammas = add_gammas(pairs, comparisons)
     gcols = [c.gamma_col for c in comparisons]
     rows = with_gammas.groupBy(*gcols).agg(F.count(F.lit(1)).alias("n")).collect()
-    return [(tuple(r[g] for g in gcols), r["n"]) for r in rows]
+    return sorted((tuple(r[g] for g in gcols), r["n"]) for r in rows)
 
 
 def estimate_m_em(

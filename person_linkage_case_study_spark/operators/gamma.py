@@ -5,7 +5,8 @@ CASE WHEN SQL; here the same model compiles two ways:
 
 - ``compile()`` → a Spark ``when()`` chain (one Catalyst expression per
   comparison, codegen'd; the Jaro-Winkler level reads a pre-materialized
-  pandas-UDF column so the UDF runs once per pair, not once per level).
+  UDF column — the JVM UDF, or the pandas UDF without the jar — so the
+  UDF runs once per pair, not once per level).
 - ``compile_sql()`` → the equivalent ANSI SQL CASE (DuckDB dialect) so the
   correctness oracle is generated from the *same* model object — the Spark
   plan and the oracle cannot drift apart.
@@ -35,7 +36,7 @@ class ComparisonLevel:
 
     kind: str
     threshold: float | None = None
-    band: int | None = None
+    band: int | float | None = None
     expr: Column | None = None
     sql: str | None = None
 
@@ -119,10 +120,11 @@ class Comparison:
         function) or a ``custom`` level (whose ``sql`` template is
         DuckDB dialect by contract) — in which case the caller falls
         back to the Column form. Literal semantics are preserved
-        exactly: gamma ordinals are INT literals as with ``F.lit(int)``,
-        and the JW threshold binds through CAST('<repr>' AS DOUBLE) so
-        it is the identical IEEE double ``F.lit(float)`` bound (a bare
-        SQL float literal would be a DECIMAL)."""
+        exactly: gamma ordinals and integer bands are INT literals as with
+        ``F.lit(int)``, and the JW threshold and a float band bind through
+        CAST('<repr>' AS DOUBLE) so each is the identical IEEE double
+        ``F.lit(float)`` bound (a bare SQL float literal would be a
+        DECIMAL)."""
         l = f"`{self.col}{left_suffix}`"
         r = f"`{self.col}{right_suffix}`"
         non_null = [lv for lv in self.levels if lv.kind != "null"]
@@ -140,7 +142,12 @@ class Comparison:
                     f" CAST('{float(lv.threshold)!r}' AS DOUBLE) THEN {gamma}"
                 )
             elif lv.kind == "banded":
-                arms.append(f"WHEN abs({l} - {r}) <= {lv.band} THEN {gamma}")
+                band = (
+                    f"CAST('{lv.band!r}' AS DOUBLE)"
+                    if isinstance(lv.band, float)
+                    else lv.band
+                )
+                arms.append(f"WHEN abs({l} - {r}) <= {band} THEN {gamma}")
             elif lv.kind == "custom":
                 return None
             elif lv.kind == "else":
@@ -184,43 +191,22 @@ def add_gammas(
     left_suffix: str = "_l",
     right_suffix: str = "_r",
     drop_jw: bool = True,
-    jw_strategy: str = "inline",
 ) -> DataFrame:
     """Evaluate every comparison's gamma over a blocked pair table.
 
-    ``jw_strategy`` controls how Jaro-Winkler columns materialize:
-
-    - ``auto`` (recommended): the JVM native UDF when the sparklinkage jar
-      is on the session classpath, else ``inline``.
-    - ``jvm``: the native Java UDF (jvm/sparklinkage.jar) — stays entirely
-      in the JVM, zero Arrow transfer; the dominant cost of pair scoring
-      disappears.
-    - ``inline``: one ArrowEvalPython pass over the pair table (the kernel
-      dedups unique pairs per batch). The fallback when the jar isn't
-      shipped (e.g. the external driver's vanilla session).
-    - ``distinct_broadcast``: compute JW only on the DISTINCT co-occurring
-      (l, r) value pairs, then broadcast-join the scores back. Only a win
-      if ``pairs`` is persisted — the distinct pass re-executes the pair
-      join otherwise (measured slower unpersisted; kept for callers that
-      cache).
-    - ``distinct_join``: same dedup, shuffle join back — for extreme
-      cardinality where the distinct set can't broadcast.
+    Jaro-Winkler columns materialize through the native JVM UDF
+    (jvm/sparklinkage.jar) when the jar is on the session classpath —
+    it stays entirely in the JVM, zero Arrow transfer — and otherwise
+    through one ArrowEvalPython pass of the pandas UDF (the kernel
+    dedups unique pairs per batch; e.g. on a vanilla session without the
+    jar). Both give the same doubles (pinned exactly by
+    tests/test_jvm_jw.py), so the path taken never moves a gamma.
 
     Everything after the JW columns is a single codegen projection.
     """
     jw_needed = [c for c in comparisons if c.needs_jw()]
     df = pairs
-    if jw_strategy == "auto":
-        jw_strategy = (
-            "jvm" if (jw_needed and ensure_jvm_jw(pairs.sparkSession)) else "inline"
-        )
-    elif jw_strategy == "jvm" and jw_needed:
-        if not ensure_jvm_jw(pairs.sparkSession):
-            raise RuntimeError(
-                "jw_strategy='jvm' but sparklinkage.jar is not on the session "
-                "classpath (build with person_linkage_case_study_spark/jvm/build.sh)"
-            )
-    if jw_needed and jw_strategy == "jvm":
+    if jw_needed and ensure_jvm_jw(pairs.sparkSession):
         # registered JVM function ⇒ one selectExpr string instead of a
         # call_udf Column chain per comparison (r16 construct batching)
         df = df.selectExpr(
@@ -231,22 +217,6 @@ def add_gammas(
                 for c in jw_needed
             ],
         )
-    elif jw_needed and jw_strategy in ("distinct_broadcast", "distinct_join"):
-        for c in jw_needed:
-            l, r = c.col + left_suffix, c.col + right_suffix
-            dist = (
-                df.select(F.col(l).alias("__jl"), F.col(r).alias("__jr"))
-                .where(F.col("__jl").isNotNull() & F.col("__jr").isNotNull())
-                .distinct()
-                .withColumn(c.jw_col, jaro_winkler_udf(F.col("__jl"), F.col("__jr")))
-            )
-            if jw_strategy == "distinct_broadcast":
-                dist = F.broadcast(dist)
-            df = df.join(
-                dist,
-                (F.col(l) == F.col("__jl")) & (F.col(r) == F.col("__jr")),
-                "left",
-            ).drop("__jl", "__jr")
     elif jw_needed:
         df = df.select(
             "*",

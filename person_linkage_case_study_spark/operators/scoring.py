@@ -176,19 +176,22 @@ def score_pairs(
     model: LinkageModel,
     threshold_match_probability: float | None = None,
     compute_gammas: bool = True,
-    jw_strategy: str = "inline",
 ) -> DataFrame:
     """K4/K7: gamma evaluation + FS arithmetic + optional probability filter.
 
     One projection for gammas, one for the weight sum — Catalyst collapses
     them into a single WholeStageCodegen stage over the blocked join output.
-    ``jw_strategy`` is forwarded to :func:`add_gammas` (see its docstring).
+    A frame that is already scored is re-scored: its ``match_weight`` and
+    ``match_probability`` (and, with ``compute_gammas``, its gamma
+    columns) are replaced, not duplicated.
     """
-    df = (
-        add_gammas(pairs, model.comparisons, jw_strategy=jw_strategy)
-        if compute_gammas
-        else pairs
-    )
+    outputs = {"match_weight", "match_probability"}
+    if compute_gammas:
+        outputs |= {c.gamma_col for c in model.comparisons}
+    stale = [c for c in pairs.columns if c in outputs]
+    df = pairs.drop(*stale) if stale else pairs
+    if compute_gammas:
+        df = add_gammas(df, model.comparisons)
     # the FS sum as ONE selectExpr string (r16 construct batching): same
     # left-associative addition order, same double constants (CAST of
     # the shortest round-trip repr) as the former per-comparison Column

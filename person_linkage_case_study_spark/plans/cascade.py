@@ -21,7 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -34,7 +34,7 @@ from ..operators.blocking import (
     estimate_pair_row_bytes,
     estimate_pair_stats,
 )
-from ..operators.dedup import keep_best, max_per_group_with_ties
+from ..operators.dedup import max_per_group_with_ties
 from ..operators.joins import anti_join
 from ..operators.scoring import LinkageModel, score_pairs
 from ..session import shuffle_partitions
@@ -254,10 +254,19 @@ class PersonLinkageCascade:
                      matching columns
     dates_of_death:  (pik, date_of_death DATE) — deceased links dropped at
                      confirm (reference 03:2146-2169)
-    jw_strategy:     how Jaro-Winkler materializes in scoring (see
-                     add_gammas). 'auto' uses the native JVM UDF when the
-                     sparklinkage jar is shipped, else the Arrow pandas
-                     UDF.
+    collect_stats:   record ``stats`` (one PassStats per pass) and
+                     ``confirm_stats`` (one ConfirmStats per module).
+                     Under the eager checkpoint modes ('local',
+                     'reliable') the counts are ``DataFrame.observe``
+                     metrics on the frames the checkpoints run anyway,
+                     so they cost no extra jobs; under 'off' and
+                     'persist' one ``count()`` job per pass and per
+                     confirm runs the frame they would checkpoint —
+                     under 'persist' it fills that frame's cache, under
+                     'off' it recomputes the frame's whole lineage.
+                     ``n_pairs_estimated`` is the K8 pair estimate (two
+                     small aggs per pass), which ``auto_pin`` runs anyway
+                     unless both pass knobs are explicit.
     auto_pin:        derive a ``num_partitions`` pin for passes that
                      leave it None (default True): the K8 pair estimate
                      (already computed when ``collect_stats``) feeds
@@ -303,12 +312,10 @@ class PersonLinkageCascade:
         model: LinkageModel,
         dates_of_death: DataFrame | None = None,
         collect_stats: bool = True,
-        jw_strategy: str = "auto",
         checkpoint: str = "local",
         auto_pin: bool = True,
         checkpoint_storage_level: StorageLevel | None = None,
     ) -> None:
-        self.jw_strategy = jw_strategy
         self.checkpoint = checkpoint
         self.checkpoint_storage_level = checkpoint_storage_level
         self._ckpt_level: StorageLevel | None = None
@@ -326,7 +333,6 @@ class PersonLinkageCascade:
         self.collect_stats = collect_stats
         self.stats: list[PassStats] = []
         self.confirm_stats: list[ConfirmStats] = []
-        self._stats_caches: list[DataFrame] = []
         # accumulator: ≤1 row per record_id_raw_input_file after each module
         self.confirmed_piks: DataFrame = spark.createDataFrame(
             [],
@@ -367,6 +373,28 @@ class PersonLinkageCascade:
         if self.checkpoint == "off":
             return df
         return df.persist(StorageLevel.MEMORY_AND_DISK)
+
+    def _count_rows(
+        self, df: DataFrame, where: Column | None = None
+    ) -> tuple[DataFrame, Observation]:
+        """Attach a count of ``df``'s rows (those matching ``where``, if
+        given) for the stats, as an ``Observation`` that the first action
+        over the returned frame's plan fills — so the count adds no job
+        of its own. Read it with ``_observed``."""
+        obs = Observation()
+        n = F.count(F.lit(1)) if where is None else F.count_if(where)
+        return df.observe(obs, n.alias("n")), obs
+
+    def _observed(self, truncated: DataFrame, *observations: Observation) -> list[int]:
+        """The counts of ``observations``, all attached below the frame
+        ``_truncate`` returned. The eager checkpoints ('local',
+        'reliable') have run it already; the lazy modes ('off',
+        'persist') have not, and ``Observation.get`` would block, so
+        there one ``count()`` of that frame runs it (under 'persist' the
+        count fills the cache its next reader uses)."""
+        if self.checkpoint not in ("local", "reliable"):
+            truncated.count()
+        return [o.get["n"] for o in observations]
 
     def _resolve_ckpt_level(self) -> StorageLevel | None:
         """Resolve once, lazily (the census count that feeds the
@@ -522,7 +550,6 @@ class PersonLinkageCascade:
             pairs,
             pass_model,
             threshold_match_probability=pass_cfg.probability_threshold,
-            jw_strategy=self.jw_strategy,
         )
         return scored.select(
             F.col("record_id_l").alias("record_id_census_2030"),
@@ -611,30 +638,33 @@ class PersonLinkageCascade:
             row_bytes=estimate_checkpoint_row_bytes(links_plan.schema),
         )
 
+        if self.collect_stats:
+            links_plan, n_links = self._count_rows(links_plan)
         new_links = self._truncate(links_plan)
-        # with the eager checkpoint above the count is free, but under a
-        # non-eager checkpoint mode it would be a whole extra job — only
-        # pay it when stats were asked for
-        n_links = new_links.count() if self.collect_stats else -1
 
         self._provisional_links = self._provisional_links.unionByName(new_links)
 
         # remove matched linkage records (NOT raw records — a nickname
         # variant matching doesn't stop the canonical record, SURVEY §7.3.5)
-        self._census_to_match = self._truncate(
-            anti_join(
-                self._census_to_match,
-                new_links.select(
-                    F.col("record_id_census_2030").alias("record_id")
-                ).distinct(),
-                on="record_id",
-            )
+        eligible = anti_join(
+            self._census_to_match,
+            new_links.select(
+                F.col("record_id_census_2030").alias("record_id")
+            ).distinct(),
+            on="record_id",
         )
-        n_eligible = self._census_to_match.count() if self.collect_stats else -1
+        if self.collect_stats:
+            eligible, n_eligible = self._count_rows(eligible)
+        self._census_to_match = self._truncate(eligible)
 
         if self.collect_stats:
             self.stats.append(
-                PassStats(cfg.name, pass_cfg.name, n_pairs, n_links, n_eligible)
+                PassStats(
+                    cfg.name,
+                    pass_cfg.name,
+                    n_pairs,
+                    *self._observed(self._census_to_match, n_links, n_eligible),
+                )
             )
 
     def confirm_piks(self) -> DataFrame:
@@ -653,14 +683,7 @@ class PersonLinkageCascade:
             piks, on="record_id_reference_file", how="left"
         )
 
-        # stats caches from the PREVIOUS module can be released now; this
-        # module's (registered below) must outlive confirm_piks because
-        # the accumulator fold may be lazy (persist / off checkpoint modes)
-        for c in self._stats_caches:
-            c.unpersist()
-        self._stats_caches = []
-
-        n_deceased_dropped = None
+        n_deceased = None
         if self.dates_of_death is not None:
             dod = self.dates_of_death.select("pik", "date_of_death")
             alive = F.col("date_of_death").isNull() | (
@@ -668,59 +691,34 @@ class PersonLinkageCascade:
             )
             links = links.join(F.broadcast(dod), on="pik", how="left")
             if self.collect_stats:
-                # the deceased count and the alive path both consume the
-                # full provisional-links+piks+dod join: cache it so the
-                # stats action doesn't recompute the module's whole link
-                # pipeline a second time
-                links = links.persist(StorageLevel.MEMORY_AND_DISK)
-                self._stats_caches.append(links)
-                n_deceased_dropped = links.filter(~alive).count()
+                links, n_deceased = self._count_rows(links, ~alive)
             links = links.filter(alive).drop("date_of_death")
 
         # best links per raw input record (ties kept), then drop records
         # whose tied best links name >1 distinct PIK (reference 03:2171-2207)
+        # and keep one row per record: the PIK gate and the deterministic
+        # row_number share one window pass over the record key. The gate
+        # drops whole records, so ranking before it keeps the same rows;
+        # collect_set drops NULL piks exactly as count_distinct does.
         best = max_per_group_with_ties(
             links, ["record_id_raw_input_file"], "match_probability"
         )
-        if self.collect_stats:
-            # consumed by the n_multi count and the confirmed pipeline —
-            # cache the window result once
-            best = best.persist(StorageLevel.MEMORY_AND_DISK)
-            self._stats_caches.append(best)
-        # single-PIK gate as a WINDOW over the same partition key the
-        # best-window and the keep_best row_number already use (r15,
-        # guide §2.4/§3.3): the former groupBy(count_distinct) + left_semi
-        # self-join put `best` under TWO consumers, and with stats off
-        # (nothing persisted) the whole module link pipeline — blocking,
-        # gammas, scoring — executed twice, once per semi-join side
-        # (measured: the duplicated subtree was both 1.25s broadcast
-        # builds in the sf0.1 plan). collect_set drops NULL piks exactly
-        # as count_distinct ignored them, so the kept record set is
-        # identical; one exchange now feeds max → gate → row_number.
         w_rec = Window.partitionBy("record_id_raw_input_file")
-        gated = (
-            best.withColumn(
-                "__npik", F.size(F.collect_set("pik").over(w_rec))
+        ranked = best.select(
+            "*",
+            F.size(F.collect_set("pik").over(w_rec)).alias("__npik"),
+            F.row_number()
+            .over(
+                w_rec.orderBy(
+                    F.desc("match_probability"), F.asc("record_id_census_2030")
+                )
             )
-            .filter(F.col("__npik") <= 1)
-            .drop("__npik")
+            .alias("__rn"),
         )
+        first = F.col("__rn") == 1
         if self.collect_stats:
-            n_multi = (
-                best.groupBy("record_id_raw_input_file")
-                .agg(F.count_distinct("pik").alias("num_unique_piks"))
-                .filter(F.col("num_unique_piks") > 1)
-                .count()
-            )
-            self.confirm_stats.append(
-                ConfirmStats(cfg.name, n_deceased_dropped, n_multi)
-            )
-        confirmed = keep_best(
-            gated,
-            keys=["record_id_raw_input_file"],
-            order_by=[F.desc("match_probability")],
-            tiebreak="record_id_census_2030",
-        ).select(
+            ranked, n_multi = self._count_rows(ranked, first & (F.col("__npik") > 1))
+        confirmed = ranked.filter(first & (F.col("__npik") <= 1)).select(
             "record_id_raw_input_file",
             "record_id_census_2030",
             "record_id_reference_file",
@@ -733,6 +731,12 @@ class PersonLinkageCascade:
         self.confirmed_piks = self._truncate(
             self.confirmed_piks.unionByName(confirmed)
         )
+        if self.collect_stats:
+            observed = [o for o in (n_deceased, n_multi) if o is not None]
+            counts = self._observed(self.confirmed_piks, *observed)
+            self.confirm_stats.append(
+                ConfirmStats(cfg.name, counts[0] if n_deceased else None, counts[-1])
+            )
         self._module = None
         self._census_to_match = None
         self._provisional_links = None

@@ -683,7 +683,7 @@ def fs_customer_supplier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = blocked_pairs(
         c, s, block_on=["nationkey"], num_partitions=spark.sparkContext.defaultParallelism
     )
-    scored = score_pairs(pairs, model, jw_strategy="auto")
+    scored = score_pairs(pairs, model)
     return scored.select(
         F.col("custkey_l").alias("custkey"),
         F.col("suppkey_r").alias("suppkey"),

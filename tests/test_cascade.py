@@ -5,6 +5,9 @@ variables), geosearch geokey pass + namesearch, deceased-link dropping,
 multi-PIK conflict dropping, ≤1-PIK invariant, final 1:1 attach.
 """
 
+import dataclasses
+import itertools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -120,14 +123,9 @@ def make_model() -> LinkageModel:
     return LinkageModel(comps, lambda_prior=1e-3)
 
 
-@pytest.fixture(scope="module")
-def cascade_result(spark, fixture):
-    census, geobase, name_dob, fake_names, dod = fixture
-    prepped_census = preprocess_census(census, fake_names, gq_threshold=99)
-    prepped_geobase = preprocess_reference_file(geobase)
-    prepped_name_dob = preprocess_reference_file(name_dob, has_address=False)
-
-    config = CascadeConfig(
+def two_module_config() -> CascadeConfig:
+    """geosearch's geokey pass, then namesearch's dob-and-nysiis pass."""
+    return CascadeConfig(
         modules=[
             ModuleConfig(
                 name="geosearch",
@@ -158,17 +156,30 @@ def cascade_result(spark, fixture):
             ),
         ]
     )
-    cascade = PersonLinkageCascade(
+
+
+def make_cascade(spark, fixture, **kwargs) -> PersonLinkageCascade:
+    """A cascade over the preprocessed fixture, with dates of death."""
+    census, geobase, name_dob, fake_names, dod = fixture
+    return PersonLinkageCascade(
         spark,
-        prepped_census,
+        preprocess_census(census, fake_names, gq_threshold=99),
         {
-            "geobase_reference_file": prepped_geobase,
-            "name_dob_reference_file": prepped_name_dob,
+            "geobase_reference_file": preprocess_reference_file(geobase),
+            "name_dob_reference_file": preprocess_reference_file(
+                name_dob, has_address=False
+            ),
         },
         make_model(),
         dates_of_death=dod,
+        **kwargs,
     )
-    confirmed = cascade.run(config)
+
+
+@pytest.fixture(scope="module")
+def cascade_result(spark, fixture):
+    cascade = make_cascade(spark, fixture)
+    confirmed = cascade.run(two_module_config())
     return cascade, confirmed.collect()
 
 
@@ -195,11 +206,90 @@ def test_at_most_one_pik_per_raw_record(cascade_result):
     assert len(raws) == len(set(raws))
 
 
+#: the fixture cascade's stats as separate count() jobs computed them:
+#: (module, pass, pairs estimated, links, still eligible) per pass and
+#: (module, deceased dropped, multi-PIK dropped) per module — c4 links to
+#: the deceased P4 and c5 ties P5A/P5B, in both modules
+WANT_PASS_STATS = [
+    ("geosearch", "geokey", 7, 7, 1),
+    ("namesearch", "dob and nysiis", 3, 3, 1),
+]
+WANT_CONFIRM_STATS = [("geosearch", 1, 1), ("namesearch", 1, 1)]
+
+
+def stats_of(cascade) -> tuple[list, list]:
+    return (
+        [dataclasses.astuple(s) for s in cascade.stats],
+        [dataclasses.astuple(s) for s in cascade.confirm_stats],
+    )
+
+
 def test_pass_stats_recorded(cascade_result):
     cascade, _ = cascade_result
-    assert len(cascade.stats) == 2
-    assert cascade.stats[0].module == "geosearch"
-    assert cascade.stats[0].n_links >= 2
+    assert stats_of(cascade) == (WANT_PASS_STATS, WANT_CONFIRM_STATS)
+
+
+_job_groups = itertools.count()
+
+
+def jobs_run(spark, fn, *args) -> int:
+    """The number of Spark jobs ``fn(*args)`` runs (counted through a job
+    group of its own)."""
+    sc = spark.sparkContext
+    group = f"test-cascade-jobs-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def jobs_per_step(spark, fixture, **kwargs) -> tuple[list, PersonLinkageCascade]:
+    """Run the two-module cascade step by step: the jobs each pass and
+    each confirm ran, and the cascade."""
+    cascade = make_cascade(spark, fixture, **kwargs)
+    counts = []
+    for mod in two_module_config().modules:
+        cascade.start_module(mod)
+        for p in mod.passes:
+            n = jobs_run(spark, cascade.run_matching_pass, p)
+            counts.append(("pass", p.name, n))
+        counts.append(("confirm", mod.name, jobs_run(spark, cascade.confirm_piks)))
+    return counts, cascade
+
+
+@pytest.fixture
+def checkpoint_mode(request, spark, tmp_path):
+    """The cascade's ``checkpoint`` mode; 'reliable' gets a checkpoint
+    directory under ``tmp_path`` for the test's duration."""
+    sc = spark.sparkContext
+    if request.param == "reliable":
+        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        yield request.param
+    finally:
+        if request.param == "reliable":
+            sc._jsc.sc().setCheckpointDir(None)
+
+
+@pytest.mark.parametrize("checkpoint_mode", ["local", "reliable"], indirect=True)
+def test_stats_add_no_jobs(spark, fixture, checkpoint_mode):
+    """collect_stats reads its counts from the frames the eager
+    checkpoints already run: each pass and each confirm runs the same
+    number of jobs with stats on as with stats off, and the counts are
+    exact (a checkpoint that ran the observed plan twice would double
+    them)."""
+    with_stats, cascade = jobs_per_step(
+        spark, fixture, collect_stats=True, checkpoint=checkpoint_mode
+    )
+    without_stats, _ = jobs_per_step(
+        spark, fixture, collect_stats=False, checkpoint=checkpoint_mode
+    )
+    assert with_stats == without_stats
+    assert all(n > 0 for *_, n in with_stats)
+    assert stats_of(cascade) == (WANT_PASS_STATS, WANT_CONFIRM_STATS)
 
 
 def test_final_attach_one_to_one(spark, fixture, cascade_result):
@@ -249,61 +339,21 @@ def test_full_pvs_pipeline(spark, fixture):
 
 def test_checkpoint_off_matches_local(spark, fixture, cascade_result):
     """checkpoint='off' (no lineage truncation — sound for shallow
-    configs) must confirm exactly the same PIKs as the default 'local'
-    mode on the 2-module fixture cascade."""
-    census, geobase, name_dob, fake_names, dod = fixture
-    prepped_census = preprocess_census(census, fake_names, gq_threshold=99)
-    config = CascadeConfig(
-        modules=[
-            ModuleConfig(
-                name="geosearch",
-                reference_file_name="geobase_reference_file",
-                cut_columns=["zip3"],
-                matching_columns=[
-                    "first_name_15", "last_name_12", "middle_initial",
-                    "day_of_birth", "month_of_birth", "year_of_birth", "geokey",
-                ],
-                passes=[PassConfig("geokey", ["geokey_for_blocking"], 0.9)],
-            ),
-            ModuleConfig(
-                name="namesearch",
-                reference_file_name="name_dob_reference_file",
-                cut_columns=["first_initial_cut", "last_initial_cut"],
-                matching_columns=[
-                    "first_name_15", "last_name_12", "middle_initial",
-                    "day_of_birth", "month_of_birth", "year_of_birth",
-                ],
-                passes=[
-                    PassConfig(
-                        "dob and nysiis",
-                        ["day_of_birth", "month_of_birth", "year_of_birth",
-                         "first_name_nysiis", "last_name_nysiis"],
-                        0.9,
-                    ),
-                ],
-            ),
-        ]
-    )
-    off = PersonLinkageCascade(
-        spark,
-        prepped_census,
-        {
-            "geobase_reference_file": preprocess_reference_file(geobase),
-            "name_dob_reference_file": preprocess_reference_file(
-                name_dob, has_address=False
-            ),
-        },
-        make_model(),
-        dates_of_death=dod,
-        checkpoint="off",
-    )
-    got = {
-        (r["record_id_raw_input_file"], r["pik"])
-        for r in off.run(config).collect()
-    }
+    configs) and 'persist' must confirm exactly the same PIKs as the
+    default 'local' mode on the 2-module fixture cascade, and the same
+    stats."""
     _, confirmed_rows = cascade_result
     want = {(r["record_id_raw_input_file"], r["pik"]) for r in confirmed_rows}
-    assert got == want
+    for mode in ("off", "persist"):
+        lazy = make_cascade(spark, fixture, checkpoint=mode)
+        got = {
+            (r["record_id_raw_input_file"], r["pik"])
+            for r in lazy.run(two_module_config()).collect()
+        }
+        assert got == want, mode
+        # no eager checkpoint runs the observed frames here, so a count()
+        # of each truncated frame does — and the stats agree
+        assert stats_of(lazy) == (WANT_PASS_STATS, WANT_CONFIRM_STATS), mode
 
 
 def test_checkpoint_storage_derivation(spark, fixture):
@@ -647,20 +697,8 @@ def test_checkpoint_disk_only_matches_local(spark, fixture, cascade_result):
     actually apply the level."""
     from pyspark import StorageLevel
 
-    census, geobase, name_dob, fake_names, dod = fixture
-    prepped_census = preprocess_census(census, fake_names, gq_threshold=99)
-    disk = PersonLinkageCascade(
-        spark,
-        prepped_census,
-        {
-            "geobase_reference_file": preprocess_reference_file(geobase),
-            "name_dob_reference_file": preprocess_reference_file(
-                name_dob, has_address=False
-            ),
-        },
-        make_model(),
-        dates_of_death=dod,
-        checkpoint_storage_level=StorageLevel.DISK_ONLY,
+    disk = make_cascade(
+        spark, fixture, checkpoint_storage_level=StorageLevel.DISK_ONLY
     )
     # the truncated frame's blocks live at disk level, not on-heap
     # (df.rdd.getStorageLevel() reflects the wrapping python RDD, not the
@@ -682,40 +720,9 @@ def test_checkpoint_disk_only_matches_local(spark, fixture, cascade_result):
         for i in new
     ), [i.storageLevel().toString() for i in new]
     assert kept.count() == 10_000
-    config = CascadeConfig(
-        modules=[
-            ModuleConfig(
-                name="geosearch",
-                reference_file_name="geobase_reference_file",
-                cut_columns=["zip3"],
-                matching_columns=[
-                    "first_name_15", "last_name_12", "middle_initial",
-                    "day_of_birth", "month_of_birth", "year_of_birth", "geokey",
-                ],
-                passes=[PassConfig("geokey", ["geokey_for_blocking"], 0.9)],
-            ),
-            ModuleConfig(
-                name="namesearch",
-                reference_file_name="name_dob_reference_file",
-                cut_columns=["first_initial_cut", "last_initial_cut"],
-                matching_columns=[
-                    "first_name_15", "last_name_12", "middle_initial",
-                    "day_of_birth", "month_of_birth", "year_of_birth",
-                ],
-                passes=[
-                    PassConfig(
-                        "dob and nysiis",
-                        ["day_of_birth", "month_of_birth", "year_of_birth",
-                         "first_name_nysiis", "last_name_nysiis"],
-                        0.9,
-                    ),
-                ],
-            ),
-        ]
-    )
     got = {
         (r["record_id_raw_input_file"], r["pik"])
-        for r in disk.run(config).collect()
+        for r in disk.run(two_module_config()).collect()
     }
     _, confirmed_rows = cascade_result
     want = {(r["record_id_raw_input_file"], r["pik"]) for r in confirmed_rows}

@@ -1,14 +1,25 @@
 """u-estimation and EM training (SURVEY.md §2.4 A10/A11)."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
+from person_linkage_case_study_spark.functions.similarity import (
+    jaro_winkler_similarity,
+)
 from person_linkage_case_study_spark.operators.estimation import (
     estimate_m_em,
+    estimate_m_two_sessions,
     estimate_u,
     lambda_from_expected_match_rate,
 )
-from person_linkage_case_study_spark.operators.gamma import exact_comparison
+from person_linkage_case_study_spark.operators.gamma import (
+    banded_comparison,
+    exact_comparison,
+    jw_comparison,
+)
+from person_linkage_case_study_spark.operators.sampling import hash_sample
 from person_linkage_case_study_spark.operators.scoring import LinkageModel
 
 
@@ -60,3 +71,88 @@ def test_em_recovers_m_on_planted_data(spark):
 def test_lambda_prior():
     lam = lambda_from_expected_match_rate(1000, 1000, 900)
     assert lam == pytest.approx(9e-4)
+
+
+def _python_gamma(comp, l, r) -> int:
+    """The gamma ``Comparison.compile`` assigns, in plain Python."""
+    if l is None or r is None:
+        return -1
+    levels = [lv for lv in comp.levels if lv.kind != "null"]
+    for i, lv in enumerate(levels):
+        if (
+            lv.kind == "else"
+            or (lv.kind == "exact" and l == r)
+            or (
+                lv.kind == "jaro_winkler"
+                and jaro_winkler_similarity(l, r) >= lv.threshold
+            )
+            or (lv.kind == "banded" and abs(l - r) <= lv.band)
+        ):
+            return len(levels) - 1 - i
+    return 0
+
+
+def test_estimation_layout_invariant(spark):
+    """u and m do not depend on the partition layout (shuffle partitions
+    1 or 8, inputs in 1 or 4 partitions), and u equals a pure-Python
+    count over the same hash samples scored with the scalar
+    Jaro-Winkler."""
+    rng = random.Random(11)
+    firsts = ["MARTHA", "MARHTA", "MARTA", "JOHN", "JON", "JOHAN", "ANN", "ANNA"]
+    lasts = ["SMITH", "SMYTH", "SMITHE", "JONES", "JONAS", "BROWN", "BRAUN"]
+
+    def rows(prefix, n):
+        return [
+            (
+                f"{prefix}{i}",
+                rng.choice(firsts + [None]),
+                rng.choice(lasts),
+                rng.randint(1950, 1965),
+            )
+            for i in range(n)
+        ]
+
+    rows_l, rows_r = rows("l", 120), rows("r", 150)
+    schema = "id string, first string, last string, year int"
+    fractions, seed = (0.5, 0.6), 21
+
+    def comparisons():
+        return [
+            jw_comparison("first"),
+            jw_comparison("last"),
+            banded_comparison("year", band=2),
+        ]
+
+    results = []
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for shuffle, parts in [(1, 1), (1, 4), (8, 1), (8, 4)]:
+            spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
+            left = spark.createDataFrame(rows_l, schema).repartition(parts)
+            right = spark.createDataFrame(rows_r, schema).repartition(parts)
+            comps = estimate_u(
+                left, right, comparisons(), seed=seed,
+                sample_keys=(["id"], ["id"]), sample_fractions=fractions,
+            )
+            model = estimate_m_two_sessions(
+                left, right, [["first", "last"], ["year"]],
+                LinkageModel(comps, lambda_prior=0.01),
+            )
+            results.append([(c.u, c.m) for c in model.comparisons])
+        sample_l = hash_sample(left, ["id"], fractions[0], seed).collect()
+        sample_r = hash_sample(right, ["id"], fractions[1], seed + 1).collect()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert all(r == results[0] for r in results[1:])
+
+    assert sample_l and sample_r
+    for comp, (u, _) in zip(comparisons(), results[0]):
+        counts = [0] * comp.n_gamma_levels()
+        valid = 0
+        for a in sample_l:
+            for b in sample_r:
+                g = _python_gamma(comp, a[comp.col], b[comp.col])
+                if g >= 0:
+                    counts[g] += 1
+                    valid += 1
+        assert u == [max(n / valid, 1e-9) for n in counts], comp.col

@@ -157,3 +157,38 @@ def test_spark_sql_compilers_match_column_form(pairs, spark):
     # score_pairs end-to-end emits the same weights as the Column math
     end = [r["match_weight"] for r in score_pairs(pairs, model).collect()]
     assert end == via_col
+
+
+def test_rescore_replaces_scores(pairs):
+    """Scoring a scored frame replaces match_weight / match_probability
+    (and the gammas) instead of adding a second, ambiguous copy."""
+    model = make_model()
+    scored = score_pairs(pairs, model)
+    other = make_model()
+    other.lambda_prior = 0.2
+    want = score_pairs(pairs, other).collect()
+    for rescored in (
+        score_pairs(scored, other),
+        score_pairs(scored, other, compute_gammas=False),
+    ):
+        assert sorted(rescored.columns) == sorted(scored.columns)
+        assert rescored.collect() == want
+
+
+def test_float_band_binds_as_double(spark):
+    """An integer band stays an INT literal; a float band binds as the
+    same IEEE double F.lit(float) would (a bare SQL literal would parse
+    as DECIMAL), and both compilers agree on a knife-edge difference."""
+    int_sql = banded_comparison("x", band=2).compile_spark_sql()
+    assert "<= 2 THEN" in int_sql and "AS DOUBLE" not in int_sql
+    comp = banded_comparison("x", band=0.1)
+    sql = comp.compile_spark_sql()
+    assert "<= CAST('0.1' AS DOUBLE) THEN" in sql
+    df = spark.createDataFrame(
+        # |l - r| = 0.09999999999999998, then 0.10000000000000003
+        [(0.3, 0.2), (0.4, 0.3), (1.0, 1.0), (None, 1.0)],
+        "x_l double, x_r double",
+    )
+    via_sql = [r[0] for r in df.selectExpr(sql).collect()]
+    via_col = [r[0] for r in df.select(comp.compile()).collect()]
+    assert via_sql == via_col == [1, 0, 2, -1]
